@@ -92,9 +92,13 @@ object Triangles {
       .join(adjLow.select(col("n").as("b"), col("adj").as("nb")), "b")
       .select(col("a"), col("b"),
         sortedInter(col("na"), col("nb")).as("common"), col("da"), col("db"))
-    // hub-low: wedge from the low endpoint, closed against the edge set
-    val elong = e.select(col("a").cast("long").as("pa"),
-      col("b").cast("long").as("pb"))
+    // hub-low: wedge from the low endpoint, closed against the edge set.
+    // Both sides of the semi-join are LONG-canonical: `e` is canonical in
+    // the input type's order, which for string ids ("10" < "9") is not
+    // the long order the probe pairs use.
+    val elong = e.select(
+      least(col("a").cast("long"), col("b").cast("long")).as("pa"),
+      greatest(col("a").cast("long"), col("b").cast("long")).as("pb"))
     val hlEdges = et.filter((col("da") <= cap) =!= (col("db") <= cap))
       .localCheckpoint() // left side of the re-attach AND the probe feed
     val hlHits = hlEdges

@@ -22,9 +22,10 @@ import graft.ops.TextOps
   *
   * Scale notes: one shuffle (the groupBy), identical topology to the MR
   * job but with Spark's map-side partial aggregation. At 100 TB the only
-  * hazard is posting-list skew for stop-words; `postings` keeps the list
-  * as ArrayType so a later consumer can spill per-word, and callers who
-  * only need frequencies should aggregate counts instead of lists.
+  * hazard is posting-list skew for stop-words ([[postingsSalted]] bounds
+  * the per-task group); `postings` keeps the list as ArrayType so a later
+  * consumer can spill per-word, and callers who only need frequencies
+  * should aggregate counts instead of lists.
   */
 object InvertedIndex {
 
@@ -53,52 +54,54 @@ object InvertedIndex {
 
   /** word → sorted ArrayType posting list (ids repeat per occurrence).
     *
-    * Two-level aggregation, NOT a direct collect_list over occurrences:
-    * level 1 counts per (word, doc_id) — a plain `count` with map-side
-    * partial aggregation, so the shuffle carries one row per DISTINCT
-    * (word, doc_id) pair instead of one row per occurrence (the dump
-    * drive's 1.4 GB corpus has ~200M occurrences but far fewer distinct
-    * pairs — this is exactly the combiner the reference never configured,
-    * SURVEY.md §4.2). Level 2 rebuilds the duplicate-preserving list with
-    * `array_repeat`, bounding a stop-word's group at #docs entries rather
-    * than #occurrences. Output is bit-identical to the one-level form:
-    * sort_array over (doc_id, n) structs orders by doc_id (unique within
-    * a word group), and repeats expand adjacently. */
+    * ONE hash exchange by word, the reference job's single shuffle
+    * (ref: InvertedIndex.java:36-133): `collect_list` of the occurrence
+    * ids per word, then a numeric `sort_array`. Duplicates survive as
+    * adjacent repeats, so a doc id that occurs n times in a word's group
+    * (n occurrences in one row, or rows sharing the id) appears n times.
+    * A null doc id gets no entry (collect_list skips nulls); the salted
+    * build keeps it as a null element, which [[postingStrings]] drops in
+    * both builds.
+    *
+    * An earlier form first counted per (word, doc_id) and rebuilt the
+    * list with `array_repeat`, as a combiner bounding each group at
+    * #docs entries. It cost an extra exchange and a struct sort per
+    * group. On perfbench `wiki_index` (6.8 MB / 6k-doc Zipf dump,
+    * local[4] on a shared 4-core host) the dump pipeline with this form
+    * and the 1 MB split floor of [[graft.sources.TextKV.readPages]] runs
+    * in 4 Spark jobs / 4 stages instead of 6 / 6, and its median
+    * `wall_s` over 10 alternating pairs fell from 4.09 s to 2.18 s.
+    * Output is bit-identical (TextOpsSpec pins it against
+    * [[postingsSalted]]). */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     occurrences(docs, idCol, textCol)
-      .groupBy("word", "doc_id").agg(count(lit(1)).as("n"))
       .groupBy("word")
-      .agg(flatten(transform(
-        sort_array(collect_list(struct(col("doc_id"), col("n")))),
-        p => array_repeat(p("doc_id"), p("n").cast("int")))).as("postings"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("postings"))
 
-  /** Range-salted variant of [[postings]] for stop-word skew: level 2's
-    * collect_list puts a hot word's ENTIRE posting list (one entry per
-    * doc containing it) into one task — the documented skew case on the
+  /** Range-salted variant of [[postings]] for stop-word skew: the plain
+    * build's collect_list puts a hot word's ENTIRE posting list (one
+    * entry per occurrence) into one task — the skew case of the GB-scale
     * bench dump, where the `[[Pn]]` markup scrubs to a "p" word hitting
     * every page.
     *
-    * The salt is doc_id DIV `rangeWidth` — a RANGE, not a hash: phase A
-    * builds per-(word, range) sub-lists (each task sorts ≤ rangeWidth
-    * distinct ids, regardless of corpus size), and because ranges
-    * partition the id space in order, phase B just CONCATENATES the
-    * sub-lists sorted by salt — no re-sort of elements, so the output
-    * is bit-identical to [[postings]]. Salt-bucket count grows with the
-    * corpus while per-task group size stays bounded — the property that
-    * survives a 100× scale-up. Cost: one extra shuffle of posting-array
-    * rows (#words × #ranges-touched), which is why it must MEASURE
-    * faster on a skewed corpus to earn the default slot.
+    * Level 1 counts per (word, doc_id), so the shuffle carries one row
+    * per distinct pair. The salt is doc_id DIV `rangeWidth` — a RANGE,
+    * not a hash: phase A builds per-(word, range) sub-lists (each task
+    * sorts ≤ rangeWidth distinct ids, regardless of corpus size), and
+    * because ranges partition the id space in order, phase B just
+    * CONCATENATES the sub-lists sorted by salt — no re-sort of elements,
+    * so the output is bit-identical to [[postings]]. Cost: two more
+    * exchanges than [[postings]] (the pair count and the per-word concat
+    * of posting arrays).
     *
-    * Measured (Prof `indexsalt`, 1.8 GB / 300k-page dump, hot "p" word
-    * in every page). Round 6: 4 cores — plain 21.6 s, salted 22.0 s;
-    * 32 cores — plain 4.9 s, salted 4.6 s (within ~5% both ways, plain
-    * kept the default). Round 7 re-measure at 4 cores: plain
-    * 26.5–31.7 s across reps, salted 25.1–25.5 s — salted is both
-    * faster and visibly more STABLE (the hot-word task no longer
-    * straggles a 4-slot schedule), so the GB-dump pipeline
-    * ([[graft.pipelines.WikiPipelines.invertedIndex]]) now defaults to
-    * salted; the parquet-scale `inverted_index` key keeps the plain
-    * two-level form (one less shuffle, no skew at that scale). */
+    * No caller takes it by default: the dump pipeline
+    * ([[graft.pipelines.WikiPipelines.invertedIndex]]) uses the
+    * one-exchange [[postings]], measured faster on the perfbench
+    * `wiki_index` dump. Earlier GB-scale `Prof indexsalt` runs (1.8 GB /
+    * 300k pages, hot "p" in every page) compared salted with the old
+    * two-level plain build, not with the one-exchange form; that
+    * comparison is unmeasured. It stays as the explicit skew escape
+    * hatch and behind the `inverted_index_salted` key. */
   def postingsSalted(docs: DataFrame, idCol: String, textCol: String,
                      rangeWidth: Long = 16384L): DataFrame =
     occurrences(docs, idCol, textCol)
@@ -115,8 +118,9 @@ object InvertedIndex {
 
   /** word → "id1,id2,…" string rows, byte-compatible with the reference's
     * text sink shape (ref: InvertedIndex.java:123-131) modulo sort order.
-    * `salted = true` routes through [[postingsSalted]] (bit-identical
-    * output — see its scaladoc for when it wins). */
+    * The default is the one-exchange [[postings]]; `salted = true` routes
+    * through [[postingsSalted]] (bit-identical output, two more
+    * exchanges). */
   def postingStrings(docs: DataFrame, idCol: String, textCol: String,
                      salted: Boolean = false): DataFrame =
     (if (salted) postingsSalted(docs, idCol, textCol)

@@ -34,13 +34,13 @@ object WikiPipelines {
     PageRank.ranked(
       WikiParser.linkGraphFused(TextKV.readPages(spark, inPath)), iters, damping)
 
-  /** XML text → (word, doc_ids) posting relation (splittable fused read). */
+  /** XML text → (word, doc_ids) posting relation: the reference's single
+    * MR job as a splittable fused read, ONE hash exchange by word for the
+    * posting lists ([[InvertedIndex.postings]]) and the range exchange of
+    * the final `orderBy`. */
   def invertedIndex(spark: SparkSession, inPath: String): DataFrame = {
     val pages = WikiParser.pagesFused(TextKV.readPages(spark, inPath))
-    // salted: measured faster + more stable than plain on the GB dump
-    // at both 4 and 32 cores (InvertedIndex.postingsSalted scaladoc)
-    InvertedIndex.postingStrings(WikiParser.docs(pages), "doc_id", "text",
-        salted = true)
+    InvertedIndex.postingStrings(WikiParser.docs(pages), "doc_id", "text")
       .orderBy("word")
   }
 

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,6 +32,48 @@ object TextKV {
   def readWholeFiles(spark: SparkSession, path: String): DataFrame =
     spark.read.option("wholetext", "true").text(path)
 
+  /** Split a comma-joined path list on commas OUTSIDE `{}` braces only,
+    * so Hadoop brace-glob paths (`/data/{a,b}.xml`) — which
+    * `newAPIHadoopFile` accepts as a single path — survive intact while
+    * the reference's comma-joined `addInputPaths` lists still split. */
+  private[graft] def splitPaths(s: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sb = new java.lang.StringBuilder
+    var depth = 0
+    s.foreach {
+      case '{' => depth += 1; sb.append('{')
+      case '}' => depth = math.max(0, depth - 1); sb.append('}')
+      case ',' if depth == 0 => out += sb.toString; sb.setLength(0)
+      case c => sb.append(c)
+    }
+    out += sb.toString
+    out.iterator.map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Adaptive `</page>` split size: total input length / (2 × cores),
+    * clamped to [1 MB, 128 MB]. Each path's length comes from its OWN
+    * filesystem, so `file:`, `hdfs:` and object-store paths mix. None
+    * (default splits) when a path's length cannot be read; that fallback
+    * logs a WARN naming the path. */
+  private[graft] def adaptiveSplitSize(conf: Configuration, paths: Seq[String],
+                                       cores: Int): Option[Long] = {
+    val lengths = paths.flatMap { p =>
+      val hp = new Path(p)
+      try Some(hp.getFileSystem(conf).getContentSummary(hp).getLength)
+      catch {
+        case e: Exception =>
+          log.warn(s"readPages: cannot read the length of '$p' ($e); " +
+            "using the input format's default splits")
+          None
+      }
+    }
+    val waves = 2L * math.max(1, cores)
+    if (lengths.size < paths.size) None
+    else Some(math.max(1L << 20, math.min(128L << 20, lengths.sum / waves)))
+  }
+
   /** S1 (page-level, SPLITTABLE) — one row per `</page>`-delimited record,
     * the scale path for a single large MediaWiki dump.
     *
@@ -51,56 +95,29 @@ object TextKV {
     * splittable Hadoop RDD and the union is a zero-shuffle concatenation
     * of their partitions.
     *
+    * Split size is SCALE-ADAPTIVE unless `maxSplitSize` overrides it:
+    * ~2 waves of tasks per core over the total input length, clamped to
+    * [1 MB, 128 MB], so an input under 1 MB keeps one split, a few-MB
+    * dump still fans out across every core, and a multi-GB one keeps
+    * split overhead amortized. If a path's length cannot be read, the
+    * read logs a WARN naming it and falls back to the input format's
+    * default splits.
+    *
     * @param maxSplitSize optional `mapreduce.input.fileinputformat
     *                     .split.maxsize` override (tests use a small value
     *                     to force many splits on a small file). */
-  /** Split a comma-joined path list on commas OUTSIDE `{}` braces only,
-    * so Hadoop brace-glob paths (`/data/{a,b}.xml`) — which
-    * `newAPIHadoopFile` accepts as a single path — survive intact while
-    * the reference's comma-joined `addInputPaths` lists still split. */
-  private[graft] def splitPaths(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new java.lang.StringBuilder
-    var depth = 0
-    s.foreach {
-      case '{' => depth += 1; sb.append('{')
-      case '}' => depth = math.max(0, depth - 1); sb.append('}')
-      case ',' if depth == 0 => out += sb.toString; sb.setLength(0)
-      case c => sb.append(c)
-    }
-    out += sb.toString
-    out.iterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   def readPages(spark: SparkSession, path: String,
                 maxSplitSize: Long = -1L): DataFrame = {
-    import org.apache.hadoop.conf.Configuration
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", "</page>")
     val paths = splitPaths(path)
     require(paths.nonEmpty, s"readPages: no input path in '$path'")
-    if (maxSplitSize > 0)
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize", maxSplitSize)
-    else {
-      // SCALE-ADAPTIVE split sizing (r17, guide §2/§6): the default local
-      // block size handed a multi-GB dump to ~10 map tasks, so the parse —
-      // the dominant per-leg cost — used a third of a 32-core session.
-      // Target ~2 waves of tasks per core, clamped to [16 MB, 128 MB] so
-      // small inputs keep one split and huge ones keep split overhead
-      // amortized. Derived from the INPUT size, not the core count alone —
-      // the same formula yields the old behavior on sf-scale fixtures.
-      try {
-        val fs = org.apache.hadoop.fs.FileSystem.get(conf)
-        val totalLen = paths.map { p =>
-          fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
-        }.sum
-        val waves = 2L * math.max(1, spark.sparkContext.defaultParallelism)
-        val adaptive = math.max(16L << 20, math.min(128L << 20, totalLen / waves))
-        conf.setLong("mapreduce.input.fileinputformat.split.maxsize", adaptive)
-      } catch { case _: Exception => () } // metadata miss: default splits
-    }
+    val splitSize =
+      if (maxSplitSize > 0) Some(maxSplitSize)
+      else adaptiveSplitSize(conf, paths, spark.sparkContext.defaultParallelism)
+    splitSize.foreach(conf.setLong("mapreduce.input.fileinputformat.split.maxsize", _))
     val records = paths.map { p =>
       spark.sparkContext
         .newAPIHadoopFile(p, classOf[TextInputFormat],

@@ -252,11 +252,12 @@ object Prof {
             .agg(count(lit(1))).collect())
         }
       case "indexsalt" =>
-        // skew drill (VERDICT r5 #6): plain two-level posting build vs
-        // the range-salted three-level variant, on the bench dump with
-        // its documented hot-"p" stop word. Keep the faster as the
-        // dump_index path; the loser stays available as the explicit
-        // skew escape hatch.
+        // skew drill: the one-exchange posting build (the dump_index
+        // path) vs the range-salted three-exchange variant, on the bench
+        // dump with its documented hot-"p" stop word. The salted form is
+        // the explicit skew escape hatch; earlier rounds measured it
+        // against the old two-level build only, so re-run this drill
+        // before moving the dump pipeline back to it.
         val path = sys.env.getOrElse("SPARK_GRAFT_DUMP_PATH", "/tmp/graft_dump.xml")
         val pages = graft.sources.TextKV.readPages(spark, path)
         val docsDf = graft.parse.WikiParser.docs(

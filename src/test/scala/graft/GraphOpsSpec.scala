@@ -305,7 +305,10 @@ class GraphOpsSpec extends SparkTestBase {
     // all three hybrid tiers run (low-low merges, hub-low wedge probes,
     // hub-hub center-wedge counts); at a huge cap the hybrid must still
     // reproduce the plain path bit for bit. Reversed duplicates feed the
-    // canonicalization as in the plain tests.
+    // canonicalization as in the plain tests. The same graph with string
+    // ids "5".."34" canonicalizes in string order ("10" < "9"), which
+    // differs from the long order of the hybrid's wedge-probe keys.
+    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(7)
     val n = 30
     val base = (for {
@@ -313,25 +316,25 @@ class GraphOpsSpec extends SparkTestBase {
       if rnd.nextDouble() < 0.15
     } yield (i, j)) ++ (1 until n).map(i => (0, i)) ++ (2 until n).map(i => (1, i))
     val df = (base ++ base.map(e => (e._2, e._1))).toDF("a", "b")
-    val planTri = Triangles.perVertex(df, "a", "b")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-    val planJ = Triangles.edgeJaccard(df, "a", "b")
-      .as[(Int, Int, Long, Long)].collect().toSet
-    assert(planTri.nonEmpty && planJ.nonEmpty)
-    for (cap <- Seq(2, 8, 1000)) {
-      val capTri = Triangles.perVertex(df, "a", "b", degreeCap = cap)
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      assert(capTri === planTri, s"perVertex cap=$cap")
-      val capJ = Triangles.edgeJaccard(df, "a", "b", degreeCap = cap)
-        .as[(Int, Int, Long, Long)].collect().toSet
-      assert(capJ === planJ, s"edgeJaccard cap=$cap")
+    val strDf = df.select((col("a") + 5).cast("string").as("a"),
+      (col("b") + 5).cast("string").as("b"))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSet
+    val planTri = rows(Triangles.perVertex(df, "a", "b"))
+    for ((ids, g) <- Seq("int ids" -> df, "string ids" -> strDf)) {
+      val plainTri = rows(Triangles.perVertex(g, "a", "b"))
+      val plainJ = rows(Triangles.edgeJaccard(g, "a", "b"))
+      assert(plainTri.nonEmpty && plainJ.nonEmpty)
+      for (cap <- Seq(2, 8, 1000)) {
+        assert(rows(Triangles.perVertex(g, "a", "b", degreeCap = cap)) === plainTri,
+          s"$ids perVertex cap=$cap")
+        assert(rows(Triangles.edgeJaccard(g, "a", "b", degreeCap = cap)) === plainJ,
+          s"$ids edgeJaccard cap=$cap")
+      }
     }
     // the 100 TB deployment knob: session conf instead of the argument
     spark.conf.set("graft.graph.degreeCap", "3")
     try {
-      val confTri = Triangles.perVertex(df, "a", "b")
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      assert(confTri === planTri, "conf-gated hybrid")
+      assert(rows(Triangles.perVertex(df, "a", "b")) === planTri, "conf-gated hybrid")
     } finally spark.conf.unset("graft.graph.degreeCap")
   }
 

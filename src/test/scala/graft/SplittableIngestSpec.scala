@@ -93,10 +93,8 @@ class SplittableIngestSpec extends SparkTestBase {
     assert(g.size == 12, s"brace glob must match both files, got ${g.size}")
   }
 
-  test("multi-MB dump under a tiny split.maxsize attributes every page once") {
-    val nPages = 2000
-    // ~2 KB of filler per page => ~4 MB file; 64 KB max splits => ~70
-    // splits with boundaries falling mid-page all over the file.
+  /** ~4 MB dump: ~2 KB of filler per page, each page linking two others. */
+  private def bigDump(nPages: Int): String = {
     val filler = "lorem ipsum dolor sit amet " * 75
     val sb = new StringBuilder("<mediawiki>\n")
     for (i <- 0 until nPages) {
@@ -109,7 +107,14 @@ class SplittableIngestSpec extends SparkTestBase {
            |""".stripMargin)
     }
     sb.append("</mediawiki>\n")
-    val path = writeTemp("big.xml", sb.toString)
+    writeTemp("big.xml", sb.toString)
+  }
+
+  test("multi-MB dump under a tiny split.maxsize attributes every page once") {
+    val nPages = 2000
+    // 64 KB max splits => ~70 splits with boundaries falling mid-page
+    // all over the file.
+    val path = bigDump(nPages)
 
     val df = TextKV.readPages(spark, path, maxSplitSize = 64 * 1024)
     assert(df.rdd.getNumPartitions > 10, "tiny maxsize must force many splits")
@@ -120,5 +125,28 @@ class SplittableIngestSpec extends SparkTestBase {
       assert(g(s"Page$i") ==
         Seq(s"Page${(i + 1) % nPages}", s"Page${(i + 7) % nPages}").sorted, s"Page$i")
     }
+  }
+
+  test("adaptive splits: a few-MB dump fans out over every core, < 1 MB stays one split") {
+    val path = bigDump(2000)
+    val len = new java.io.File(path).length
+    assert(len > (3L << 20) && len < (5L << 20), s"fixture is ~4 MB, got $len")
+    // local[4] → ~2 waves per core would be 0.5 MB splits; the 1 MB floor
+    // leaves one split per MB
+    val adaptive = TextKV.readPages(spark, path)
+    assert(adaptive.rdd.getNumPartitions >= 4,
+      s"~4 MB at local[4] must use >= 4 splits, got ${adaptive.rdd.getNumPartitions}")
+    val oneSplit = TextKV.readPages(spark, path, maxSplitSize = len)
+    assert(oneSplit.rdd.getNumPartitions == 1)
+    assert(graphMap(WikiParser.pages(adaptive)) == graphMap(WikiParser.pages(oneSplit)))
+
+    val small = writeTemp("fixture.xml", fixtureXml)
+    assert(new java.io.File(small).length < (1L << 20))
+    assert(TextKV.readPages(spark, small).rdd.getNumPartitions == 1)
+
+    // a path whose length cannot be read falls back to default splits
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(TextKV.adaptiveSplitSize(conf, Seq(path), 4).contains(1L << 20))
+    assert(TextKV.adaptiveSplitSize(conf, Seq(path, path + ".missing"), 4).isEmpty)
   }
 }

@@ -105,12 +105,14 @@ class TextOpsSpec extends SparkTestBase {
 
   test("range-salted posting build is bit-identical to the plain build") {
     // 40 docs over a tiny rangeWidth=8 → 5 salt buckets per hot word;
-    // duplicates, gaps, and a word present in every doc (the stop-word
-    // shape the salt exists for)
-    val docs = (0L until 40L).map { i =>
+    // duplicates, gaps, a word present in every doc (the stop-word shape
+    // the salt exists for), and doc id 5 on two rows (the one-level
+    // build repeats it per occurrence across rows, as the salted build's
+    // per-(word, doc_id) count does)
+    val docs = ((0L until 40L).map { i =>
       val rep = if (i % 3 == 0) "dog dog" else "dog"
       (i, s"stop $rep ${if (i % 7 == 0) "rare" else ""}")
-    }.toDF("doc_id", "text")
+    } :+ ((5L, "dog stop"))).toDF("doc_id", "text")
     val plain = InvertedIndex.postings(docs, "doc_id", "text")
       .orderBy("word").as[(String, Seq[Long])].collect().toSeq
     val salted = InvertedIndex.postingsSalted(docs, "doc_id", "text",
@@ -120,7 +122,8 @@ class TextOpsSpec extends SparkTestBase {
     assert(plain.map(_._1) == Seq("dog", "rare", "stop"))
     // sortedness + duplicate preservation survive the concat
     val dog = plain.find(_._1 == "dog").get._2
-    assert(dog == dog.sorted && dog.size == 40 + 14)
+    assert(dog == dog.sorted && dog.size == 40 + 14 + 1)
+    assert(dog.count(_ == 5L) == 2)
   }
 
   test("explodeTokensWithPos preserves in-document order") {
